@@ -3,11 +3,36 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Scale-adaptive session knobs shared by the graft entry points
-  * (Bench, Verify, tools). Everything here is sized by DATA VOLUME,
-  * not by the local core count, so the same settings hold from sf0.001
-  * to a 100 TB cluster; each knob is env-overridable for A/B runs.
+  * (Bench, Verify, `etl.Main`, the test session, the benchmark).
+  * Everything here is sized by DATA VOLUME or by the engine's own
+  * working set, not by the local core count, so the same settings hold
+  * from sf0.001 to a 100 TB cluster; the AQE knobs are env-overridable
+  * for A/B runs.
   */
 object SessionTuning {
+
+  /** Capacity of Catalyst's JVM-wide generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, Spark default 100).
+    *
+    * One ETL load (`etl.Pipeline.run` + `writeObserved` over the ten
+    * tables, the benchmark's `etl_load`) compiles 247 distinct
+    * generated classes. A 100-entry LRU cache holds fewer than half of
+    * them, and repeated loads touch them in the same cyclic order, so
+    * nearly every lookup misses: each warm load recompiled ~260 classes
+    * in Janino. With 1024 entries, about four loads' worth, a warm load
+    * compiles none and its median CPU time drops by 39%
+    * (`bench/codegen_cache_r23.txt`), with room left for the read paths
+    * and registry queries sharing the JVM.
+    *
+    * This is a STATIC conf: `CodeGenerator` reads it once, when the
+    * first class is generated in the JVM, and every later session
+    * shares that cache. Setting it on the builder therefore only works
+    * when this builder creates the first session of the JVM, as each
+    * entry point above does; a session built afterwards cannot resize
+    * it. `CodegenCacheSpec` proves the setting reaches `CodeGenerator`
+    * by counting compiles, not by reading the conf back.
+    */
+  val CodegenCacheEntries: Int = 1024
 
   /** Post-shuffle partition coalescing by advisory BYTES instead of
     * "keep parallelism up to the core count" (guide §2.2):
@@ -28,9 +53,13 @@ object SessionTuning {
     * `spark.sql.shuffle.partitions` stays the entry point's core-count
     * ceiling (AQE only coalesces DOWN from it); a 100 TB deployment
     * raises that ceiling, not these knobs.
+    *
+    * The three AQE values equal Spark 4.1's defaults; the codegen cache
+    * size ([[CodegenCacheEntries]]) is the one setting that differs.
     */
   def scaleAdaptive(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.sql.adaptive.enabled",
+    b.config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      .config("spark.sql.adaptive.enabled",
         sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
         sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))

@@ -22,12 +22,12 @@ object Verify {
       new java.io.File(s).mkdirs()
       sys.props("java.io.tmpdir") = s
     }
-    val spark = SparkSession.builder()
+    val spark = SessionTuning.scaleAdaptive(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", scratch.getOrElse(sys.props("java.io.tmpdir")))
+      .config("spark.local.dir", scratch.getOrElse(sys.props("java.io.tmpdir"))))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -3,7 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
-import graft.sources.Gff3
+import graft.sources.{FirstLine, Gff3}
 
 /** Homolog table from header-validated TSV (reference
   * `import_homologs.py:79-150`).
@@ -37,8 +37,9 @@ object HomologsEtl {
   }
 
   def load(spark: SparkSession, path: String): Result = {
-    // V3 — header-set validation (driver-side single line).
-    val headerLine = spark.read.textFile(path).limit(1).collect().head
+    // V3 — header-set validation (driver-side single line, no Spark job).
+    val headerLine = FirstLine(spark, path)
+      .getOrElse(throw new IllegalArgumentException(s"$path: empty homolog file"))
     val header = headerLine.stripPrefix("##").split("\t").map(_.trim.toLowerCase).toSeq
     val missing = requiredColumns.filterNot(header.contains)
     require(missing.isEmpty, s"$path: missing homolog header column(s): " +
@@ -46,14 +47,15 @@ object HomologsEtl {
     header.filterNot(requiredColumns.contains)
       .foreach(c => System.err.println(s"[homologs] ignoring extra column $c"))
 
-    // Positional mapping of data rows to the 13 expected names.
-    val lines = spark.read.textFile(path)
+    // Positional mapping of data rows to the 13 expected names, in one
+    // projection (a withColumn per name re-analyzes the growing plan).
+    val fields = spark.read.textFile(path)
       .withColumn("__ord", monotonically_increasing_id())
       .filter(col("value") =!= headerLine)
-      .withColumn("f", split(col("value"), "\t", -1))
-    val named = requiredColumns.zipWithIndex.foldLeft(lines) {
-      case (df, (name, i)) => df.withColumn(name, trim(col("f")(i)))
-    }
+      .select(col("__ord"), split(col("value"), "\t", -1).as("f"))
+    val named = fields.select(col("__ord") +: requiredColumns.zipWithIndex.map {
+      case (name, i) => trim(col("f")(i)).as(name)
+    }: _*)
 
     def side(n: Int, prefix: String) = Seq(
       col(s"id$n").as(s"${prefix}_gene_id"),

@@ -1,6 +1,7 @@
 package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.SessionTuning
 import graft.model.EtlOptions
 
 /** CLI mirroring the reference's loader surface
@@ -51,11 +52,11 @@ object Main {
     val outDir = rest(0)
     val inputs = rest.drop(1)
 
-    val spark = SparkSession.builder()
+    val spark = SessionTuning.scaleAdaptive(SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.session.timeZone", "UTC"))
       .getOrCreate()
     try run(spark, cmd, create, outDir, inputs)
     finally spark.stop()

@@ -9,19 +9,24 @@ import org.apache.spark.sql.functions._
   * `import_homologs.py:114`, `import_genes_exons.py:120-126`,
   * `import_features.py:203-211`).
   *
-  * D1/D3 run as ONE hash aggregation — `min`/`max` of a
+  * D1/D3 run as one grouped aggregation — `min`/`max` of a
   * `struct(ord…, kept non-key columns)` per key — instead of the former
   * exchange + per-partition sort + row_number window (r21, guide
   * §2.3 "aggregate before you shuffle"): the partial aggregate
   * combines map-side, so the shuffle carries at most one row per
-  * (map task, key) rather than every input row, and the sort is gone
-  * entirely. Struct comparison is lexicographic by field with nulls
-  * ordered first — exactly `ORDER BY … ASC NULLS FIRST` under `min`
-  * and `ORDER BY … DESC NULLS LAST` under `max`, Spark's window
-  * defaults, so winners are identical to the window form wherever the
-  * ordering keys are unique per key group; on full ties the pick is
-  * deterministic (whole-row extremum) where the window's was
-  * scan-order-dependent. AQE handles skewed key groups.
+  * (map task, key) rather than every input row. Spark cannot keep a
+  * struct-typed `min`/`max` buffer in a hash aggregate, so the
+  * physical plan is `Sort → SortAggregate (partial) → Exchange → Sort →
+  * SortAggregate (final)`: one sort on each side of the exchange, by
+  * the grouping keys (`plans/r22/q08_lastwins_upsert_after.txt`,
+  * `plans/r22/q44_etl_features_after.txt`); the post-exchange sort sees
+  * only the pre-aggregated rows. Struct comparison is lexicographic
+  * by field with nulls ordered first — exactly `ORDER BY … ASC NULLS
+  * FIRST` under `min` and `ORDER BY … DESC NULLS LAST` under `max`,
+  * Spark's window defaults, so winners are identical to the window
+  * form wherever the ordering keys are unique per key group; on full
+  * ties the pick is deterministic (whole-row extremum) where the
+  * window's was scan-order-dependent. AQE handles skewed key groups.
   */
 object Dedup {
 

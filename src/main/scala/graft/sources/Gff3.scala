@@ -34,10 +34,11 @@ object Gff3 {
       .withColumn("__ord", monotonically_increasing_id())
 
   /** V4 — `##gff-version 3` pragma check on the first line (reference
-    * `import_features.py:72-76`). Driver-side single-line read.
+    * `import_features.py:72-76`). Driver-side single-line read, no
+    * Spark job.
     */
   def assertVersionPragma(spark: SparkSession, path: String): Unit = {
-    val first = spark.read.textFile(path).limit(1).collect().headOption
+    val first = FirstLine(spark, path)
     require(first.exists(_.trim.endsWith("gff-version 3")),
       s"$path: expected first line to end with 'gff-version 3'")
   }

@@ -19,12 +19,12 @@ object TestSpark {
   def scratchDir(prefix: String): String = scratchPath(prefix).toString
 
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = SessionTuning.scaleAdaptive(SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", scratchDir("graft_wh"))
-      .config("spark.ui.enabled", "false")
+      .config("spark.ui.enabled", "false"))
       .getOrCreate()
     // Kill the CRC-sidecar race: Hadoop caches ONE LocalFileSystem
     // instance per scheme, and Spark's streaming checkpoint managers
