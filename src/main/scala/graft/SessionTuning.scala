@@ -14,15 +14,21 @@ object SessionTuning {
   /** Capacity of Catalyst's JVM-wide generated-class cache
     * (`spark.sql.codegen.cache.maxEntries`, Spark default 100).
     *
+    * Spark 4.1.2 keys this cache by (context classloader, source). The
+    * driver thread and a task thread have different context
+    * classloaders, so a whole-stage class compiles once on the driver
+    * and once in its first task, and takes two entries.
+    *
     * One ETL load (`etl.Pipeline.run` + `writeObserved` over the ten
-    * tables, the benchmark's `etl_load`) compiles 247 distinct
-    * generated classes. A 100-entry LRU cache holds fewer than half of
-    * them, and repeated loads touch them in the same cyclic order, so
-    * nearly every lookup misses: each warm load recompiled ~260 classes
-    * in Janino. With 1024 entries, about four loads' worth, a warm load
-    * compiles none and its median CPU time drops by 39%
-    * (`bench/codegen_cache_r23.txt`), with room left for the read paths
-    * and registry queries sharing the JVM.
+    * tables, the benchmark's `etl_load`) fills 247 entries: 178
+    * distinct sources, 69 of them compiled twice
+    * (`bench/codegen_per_read_r24.txt`). A 100-entry LRU cache holds
+    * fewer than half of them, and repeated loads touch them in the same
+    * cyclic order, so nearly every lookup misses: each warm load
+    * recompiled ~260 classes in Janino. With 1024 entries, about four
+    * loads' worth, a warm load compiles none and its median CPU time
+    * drops by 39% (`bench/codegen_cache_r23.txt`), with room left for
+    * the read paths and registry queries sharing the JVM.
     *
     * This is a STATIC conf: `CodeGenerator` reads it once, when the
     * first class is generated in the JVM, and every later session
@@ -56,9 +62,12 @@ object SessionTuning {
     *
     * The three AQE values equal Spark 4.1's defaults; the codegen cache
     * size ([[CodegenCacheEntries]]) is the one setting that differs.
+    * The builder also installs [[graft.plans.ParamLiterals]], so reads
+    * that differ only in their numeric bounds share one generated class.
     */
   def scaleAdaptive(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+    b.withExtensions(_.injectColumnar(_ => graft.plans.ParamLiterals.Columnar))
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       .config("spark.sql.adaptive.enabled",
         sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
